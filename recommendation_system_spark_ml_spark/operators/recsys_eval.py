@@ -575,8 +575,8 @@ def ml_rec_eval_als_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly comparable -- the model-selection memo the reference's
     RMSE-only CV never produces.
 
-    ALS is fit on the FULL train split (seeded, rank 10, the
-    ml_als_rmse hyper-parameters); candidates come from
+    ALS is fit on the FULL train split (seeded, rank 10, maxIter 10,
+    regParam 0.05); candidates come from
     recommendForUserSubset over the capped evaluation pool
     (_eval_user_pool -- at most EVAL_USER_CAP hash-selected users,
     the factor-matmul top-k runs for THEM only), then seen-items are

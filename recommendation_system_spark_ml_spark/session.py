@@ -33,6 +33,9 @@ _DEFAULTS = {
     # testdata events.parquet carries TIMESTAMP(NANOS) which the Spark
     # reader rejects; read as long + convert in sources/catalog.py.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Spark 4.1's default, under which every oracle hash was taken:
+    # with it off, overflows and bad casts turn into NULLs.
+    "spark.sql.ansi.enabled": "true",
     "spark.ui.enabled": "false",
 }
 
@@ -66,16 +69,18 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
     """Pin the runtime-settable confs this engine's results depend on.
 
     Queries receive the *driver's* session, whose conf we don't control;
-    UTC timezone + Arrow + AQE are all runtime-settable, so enforce them
-    here so results (esp. timestamp columns) are oracle-comparable.
+    UTC timezone + Arrow + AQE + ANSI mode are all runtime-settable, so
+    enforce them here so results (esp. timestamp columns) are
+    oracle-comparable.
     """
     for k in ("spark.sql.session.timeZone",
               "spark.sql.execution.arrow.pyspark.enabled",
               "spark.sql.adaptive.enabled",
               "spark.sql.adaptive.coalescePartitions.enabled",
               "spark.sql.adaptive.skewJoin.enabled",
-              "spark.sql.legacy.parquet.nanosAsLong"):
-        spark.conf.set(k, _DEFAULTS[k] if k in _DEFAULTS else "true")
+              "spark.sql.legacy.parquet.nanosAsLong",
+              "spark.sql.ansi.enabled"):
+        spark.conf.set(k, _DEFAULTS[k])
     # Size the shuffle fan-out to the machine, not Spark's default 200:
     # AQE coalesces DataFrame shuffles either way, but MLlib's RDD paths
     # (ALS, KMeans) and streaming state stores don't get AQE -- 200 tiny
